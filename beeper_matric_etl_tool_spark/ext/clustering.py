@@ -2,18 +2,24 @@
 similarity search (SURVEY §2.12 scale path).
 
 `knn_search` (ivf strategy) prunes probes to a coarse partition; this module *builds* that
-partition assignment when none exists. Lloyd's algorithm as pure DataFrame
-ops per iteration:
+partition assignment when none exists. One Lloyd loop serves both k-means
+and product quantization (`ext/quantization.py:train_pq`): the centroids
+live on the driver as an (m, k, dsub) numpy tensor — plain k-means is
+m = 1, PQ trains m subspaces of dsub contiguous positions at once — and
+each round is ONE pass over the persisted corpus plus one aggregate:
 
-  assign:   mapInPandas over the corpus with the RESIDENT centroid matrix
-            (k×dim, driver-collected — it is k rows by construction): one
-            vectorized ‖c−q‖² argmin per Arrow batch, vector passed
-            through. No shuffle, no per-pair array materialization.
-  update:   posexplode → groupBy(cluster, position) → per-dimension mean
-            (one shuffle of partial sums, map-side combined), re-assembled.
+  assign+sum: mapInPandas with the resident centroid tensor: one
+              vectorized ‖c−v‖² argmin per subspace per Arrow batch, and
+              in the same pass the partition's exact integer sums of
+              floor(v·2¹⁶) and member counts per (subspace, cluster,
+              position). No shuffle of vectors, no per-pair arrays.
+  combine:    a groupBy-sum of those partials (m·k·dsub rows — one
+              codebook, not corpus-sized), collected to the driver, which
+              takes the means; a cluster with no members keeps its
+              previous centroid.
 
-The loop is driver-side but each iteration is a full cluster-parallel job —
-the pattern Spark MLlib itself uses. Iterations are bounded and
+Integer addition is exact and order-independent, so the trained centroids
+are bit-stable across input partitionings. Iterations are bounded and
 deterministic: init picks the first k vectors by id, ties in argmin break
 toward the lower cluster id (numpy argmin keeps the first minimum).
 """
@@ -22,10 +28,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from beeper_matric_etl_tool_spark.ext.similarity import dot
+from beeper_matric_etl_tool_spark.ext.similarity import QUANT, dot
 
 
 def _sq_dist(a, b):
@@ -33,14 +40,84 @@ def _sq_dist(a, b):
     return dot(diff, diff)
 
 
+def _nearest(V: np.ndarray, C: np.ndarray, cn2: np.ndarray) -> np.ndarray:
+    """Row-wise argmin of ‖v−c‖² over the rows of C (cn2 = ‖c‖²):
+    argmin (‖c‖² − 2 v·c), since ‖v‖² is constant per row. Ties go to
+    the lower centroid index (np.argmin keeps the first minimum)."""
+    return np.argmin(cn2[None, :] - 2.0 * (V @ C.T), axis=1)
+
+
+def _seed(corpus: DataFrame, k: int, vec_col: str, id_col: str) -> np.ndarray:
+    """(k', dim) float64 — the k lowest-id vectors (k' < k only when the
+    corpus is smaller). Seeds come from a REAL ordering (the vector id),
+    not row order, which is a plan artifact: a seed permutation would flip
+    distance-tie assignments."""
+    rows = corpus.orderBy(F.col(id_col).asc()).limit(k).select(vec_col).collect()
+    dim = len(rows[0][0]) if rows else 0
+    return np.array([r[0] for r in rows], dtype=np.float64).reshape(len(rows), dim)
+
+
+def _lloyd(corpus: DataFrame, C: np.ndarray, iterations: int, vec_col: str) -> np.ndarray:
+    """Run ``iterations`` Lloyd rounds from the (m, k, dsub) float64
+    centroid tensor ``C`` over the (persisted) ``corpus``; subspace j
+    covers vector positions [j·dsub, (j+1)·dsub). Returns the updated
+    tensor. Each round is one aggregate-and-collect: the update sums
+    QUANTIZED LONGS, not raw doubles, so the mean (exact long sum / count
+    / 2¹⁶, a power-of-two rescale) is the same on any partition layout
+    or shuffle order; the 2⁻¹⁶ resolution loss per step is far below
+    k-means' own convergence tolerance."""
+    m, k, dsub = C.shape
+    for _ in range(iterations):
+        cn2 = np.einsum("mkd,mkd->mk", C, C)
+
+        def partial_sums(batches, C=C, cn2=cn2):
+            S = np.zeros((m, k, dsub), dtype=np.int64)
+            N = np.zeros((m, k), dtype=np.int64)
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                V = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
+                Q = np.floor(V * QUANT).astype(np.int64)
+                for j in range(m):
+                    cols = slice(j * dsub, (j + 1) * dsub)
+                    best = _nearest(V[:, cols], C[j], cn2[j])
+                    np.add.at(S[j], best, Q[:, cols])
+                    N[j] += np.bincount(best, minlength=k)
+            js, cs = np.nonzero(N)
+            yield pd.DataFrame({
+                "subspace": np.repeat(js, dsub),
+                "cluster_id": np.repeat(cs, dsub),
+                "pos": np.tile(np.arange(dsub), len(js)),
+                "s": S[js, cs].reshape(-1),
+                "n": np.repeat(N[js, cs], dsub),
+            })
+
+        sums = (
+            corpus.select(vec_col)
+            .mapInPandas(partial_sums, "subspace int, cluster_id int, pos int, s bigint, n bigint")
+            .groupBy("subspace", "cluster_id", "pos")
+            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
+            .toPandas()
+        )
+        S = np.zeros((m, k, dsub), dtype=np.int64)
+        N = np.zeros((m, k, dsub), dtype=np.int64)
+        at = (sums["subspace"].to_numpy(), sums["cluster_id"].to_numpy(), sums["pos"].to_numpy())
+        S[at], N[at] = sums["s"].to_numpy(), sums["n"].to_numpy()
+        # a cluster that lost every member keeps its previous centroid:
+        # dropping it would emit < k centroids, and IVF layouts built on
+        # "k coarse partitions" would quietly get coarser pruning
+        C = np.where(N > 0, S / np.maximum(N, 1) / QUANT, C)
+    return C
+
+
 def assign_clusters(df: DataFrame, centroids: DataFrame, vec_col: str = "embedding",
                     id_col: str = "vec_id", keep_vec: bool = False) -> DataFrame:
     """(id, cluster_id[, vec]) — nearest centroid per row via one vectorized
     distance matrix per Arrow batch against the resident k×dim centroid
     matrix. Shuffle-free: the corpus partitioning passes straight through,
-    and with ``keep_vec`` the vector rides along so the Lloyd update step
-    needs no re-join. Ties break toward the lower cluster id (np.argmin
-    keeps the first minimum; centroid rows are ordered by cluster_id).
+    and with ``keep_vec`` the vector rides along. Ties break toward the
+    lower cluster id (np.argmin keeps the first minimum; centroid rows are
+    ordered by cluster_id).
 
     The output schema is DERIVED from the input: the id column keeps its
     own type (any integral or string id works — it passes through the
@@ -75,10 +152,7 @@ def assign_clusters(df: DataFrame, centroids: DataFrame, vec_col: str = "embeddi
             if len(pdf) == 0:
                 continue
             V = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            # argmin ‖v−c‖² = argmin (‖c‖² − 2 v·c) per row — ‖v‖² is constant
-            d = cn2[None, :] - 2.0 * (V @ C.T)
-            best = cids[np.argmin(d, axis=1)]
-            out = {id_col: pdf[id_col], "cluster_id": best}
+            out = {id_col: pdf[id_col], "cluster_id": cids[_nearest(V, C, cn2)]}
             if keep_vec:
                 out[vec_col] = pdf[vec_col]
             yield pd.DataFrame(out)
@@ -96,73 +170,32 @@ def kmeans(
     """Returns (assignments, centroids). Deterministic init: the k lowest-id
     vectors seed the centroids.
 
-    The update step is DIMENSION-AGNOSTIC: ``posexplode`` → one partial-
-    combined groupBy on (cluster, position) → sorted re-assembly. No driver
-    dim probe, no per-dimension ``F.sum(vec[i])`` expression list — the old
-    form built `dim` aggregate expressions and blew up analysis/codegen at
-    real embedding widths (768–4096); this one's plan is the same size at
-    dim 8 and dim 4096, and the shuffled aggregate is k·dim rows."""
-    # the corpus is read 2× per Lloyd iteration (assign + update join);
-    # cache it for the duration of the build — at scale this is the same
-    # persist MLlib's own KMeans performs on its training RDD
-    df = df.select(F.col(id_col), F.col(vec_col)).persist()
-    # seed ids must come from a REAL ordering (the vector id), not
-    # row_number over a constant — post-limit row order is a plan artifact
-    # and a seed permutation would flip distance-tie assignments.
-    centroids = (
-        df.orderBy(F.col(id_col).asc())
-        .limit(k)
-        .select(F.col(id_col), F.col(vec_col).alias("centroid"))
-        .withColumn("cluster_id", F.row_number().over(Window.orderBy(F.col(id_col).asc())) - 1)
-        .drop(id_col)
-    ).cache()
-
-    for _ in range(iterations):
-        # vector rides through the assign stage — no corpus re-join
-        assigned = assign_clusters(df, centroids, vec_col, id_col, keep_vec=True)
-        exploded = assigned.select(
-            "cluster_id", F.posexplode(F.col(vec_col)).alias("pos", "val")
-        )
-        # per (cluster, dimension): sum + member count in ONE aggregate —
-        # each member contributes exactly one value per position, so
-        # count(val) at any position IS the cluster size
-        means = (
-            exploded.groupBy("cluster_id", "pos")
-            .agg(
-                F.sum(F.col("val").cast("double")).alias("__s"),
-                F.count(F.lit(1)).alias("__n"),
-            )
-            .select(
-                "cluster_id", "pos",
-                (F.col("__s") / F.col("__n")).cast("float").alias("__m"),
-            )
-        )
-        prev = centroids
-        updated = means.groupBy("cluster_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "__m"))),
-                lambda x: x["__m"],
-            ).alias("centroid")
-        )
-        # a cluster that lost every member this iteration has no mean rows;
-        # silently dropping it would return < k centroids and downstream
-        # IVF layouts built on "k coarse partitions" would quietly get
-        # coarser pruning. Standard Lloyd practice: carry the previous
-        # centroid forward (both frames are k-row — the anti-join is free).
-        centroids = updated.unionByName(
-            prev.join(updated.select("cluster_id"), on="cluster_id", how="left_anti")
-        ).cache()
-        centroids.count()  # materialize before releasing the parent cache
-        prev.unpersist()
-    # final re-assignment against the LAST updated centroids — without it
-    # the returned assignments answer to the previous iteration's centroids
-    # and the Lloyd invariant (every vector in its argmin cluster over the
-    # EMITTED centroids) does not hold. This is how Lloyd terminates.
-    assignments = assign_clusters(df, centroids, vec_col, id_col)
-    # cut the lineage: the final assignment is |corpus| skinny rows, but its
-    # lazy plan replays the assign stage for every downstream reference.
-    # Materializing here turns consumers' plans into 'scan + join a small
-    # cached relation' — and lets the corpus cache go.
-    assignments = assignments.localCheckpoint(eager=True)
-    df.unpersist()
+    The Lloyd rounds are `_lloyd` with m = 1: one corpus pass and one
+    k·dim-row aggregate per round, whatever the embedding width — no
+    per-dimension aggregate expressions, so the plan is the same size at
+    dim 8 and dim 4096. Centroids are emitted as array<float> (array<double>
+    for a double input), one row per cluster_id."""
+    # persisted for the build: every round and the final assignment read
+    # it — the same persist MLlib's own KMeans performs on its training RDD
+    corpus = df.select(F.col(id_col), F.col(vec_col)).persist()
+    C = _lloyd(corpus, _seed(corpus, k, vec_col, id_col)[None], iterations, vec_col)[0]
+    elem, dtype = (
+        ("double", np.float64)
+        if df.schema[vec_col].dataType.elementType.simpleString() == "double"
+        else ("float", np.float32)
+    )
+    # an Arrow table plans as a LocalRelation whatever the session's Arrow
+    # setting: reading the k centroid rows launches no job
+    centroids = df.sparkSession.createDataFrame(
+        pa.table({"cluster_id": np.arange(len(C)), "centroid": list(C.astype(dtype))}),
+        f"cluster_id bigint, centroid array<{elem}>",
+    )
+    # final re-assignment against the EMITTED centroids — the Lloyd
+    # invariant (every vector in its argmin cluster over the returned
+    # centroids) holds only then. Materialized: the assignment is
+    # |corpus| skinny rows whose lazy plan would otherwise replay the
+    # assign stage for every downstream reference, and the corpus cache
+    # can go.
+    assignments = assign_clusters(corpus, centroids, vec_col, id_col).localCheckpoint(eager=True)
+    corpus.unpersist()
     return assignments, centroids

@@ -16,14 +16,13 @@ by construction) turns each corpus row's score into ``m`` table gathers.
 
 Plan shapes (all linear, no corpus×corpus anything):
 
-- ``train_pq``: ONE Lloyd loop over the subvector relation — the corpus
-  exploded to (id, subspace, subvec) rows (m× rows, same total bytes,
-  zero-shuffle fan-out at the row's location). Assign is a shuffle-free
-  ``mapInPandas`` against the resident (m·k)×dsub codebook tensor; update
-  is one map-side-combined groupBy of (subspace, cluster, position)
-  partial sums — m·k·dsub shuffled rows ( = one codebook) per iteration,
-  NOT corpus-sized. Training all m subspaces in one loop instead of m
-  separate kmeans() calls keeps corpus passes at 2/iteration total.
+- ``train_pq``: ONE joint Lloyd loop for all m subspaces — the shared
+  ``ext/clustering.py:_lloyd`` with the (m, k, dsub) codebook tensor kept
+  on the driver. Per round: one pass over the persisted corpus (a
+  shuffle-free ``mapInPandas`` that assigns each subvector and emits the
+  partition's integer partial sums), then one groupBy-sum of
+  (subspace, cluster, position) partials — m·k·dsub shuffled rows
+  ( = one codebook), NOT corpus-sized — collected to the driver.
 - ``encode_pq``: one shuffle-free ``mapInPandas`` pass — m vectorized
   argmins per Arrow batch, emitting the m-code array.
 - ``pq_topk``: one shuffle-free ADC scoring pass over the ENCODED corpus
@@ -52,9 +51,17 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from beeper_matric_etl_tool_spark.ext.clustering import (
+    _lloyd,
+    _nearest,
+    _seed,
+    _sq_dist,
+    kmeans,
+)
 from beeper_matric_etl_tool_spark.ext.similarity import MAX_PROBES, QUANT
 
 
@@ -109,138 +116,38 @@ def train_pq(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Train the m per-subspace codebooks in ONE joint Lloyd loop.
-    Returns (subspace, cluster_id, centroid: array<double> of EXACT
-    integers floor(c·2¹⁶)) — frozen to the repo's quantized-integer
-    convention at the end of training so every downstream code/score is
-    integer-exact (module docstring).
+    """Train the m per-subspace codebooks in ONE joint Lloyd loop (the
+    shared `ext/clustering.py:_lloyd`, with m subspaces). Returns
+    (subspace, cluster_id, centroid: array<double> of EXACT integers
+    floor(c·2¹⁶)) — frozen to the repo's quantized-integer convention at
+    the end of training so every downstream code/score is integer-exact
+    (module docstring).
 
     Deterministic init mirrors ext/clustering.py:kmeans: the k lowest-id
     vectors seed every subspace (their j-th subvectors seed subspace j).
-    Empty clusters carry the previous centroid forward, so the emitted
-    grid is always full m×k."""
-    dim = len(df.select(vec_col).first()[0])
-    dsub = _check_geometry(dim, m)
-
-    sub = df.select(
-        F.col(id_col).alias("__id"),
-        F.posexplode(split_subvectors(F.col(vec_col), m, dsub)).alias(
-            "subspace", "subvec"
-        ),
-    ).persist()
-
-    seed_w = Window.orderBy(F.col("__id").asc())
-    centroids = (
-        sub.join(
-            df.select(F.col(id_col).alias("__id"))
-            .orderBy(F.col("__id").asc())
-            .limit(k)
-            .withColumn("cluster_id", F.row_number().over(seed_w) - 1),
-            on="__id",
+    Empty clusters keep their previous centroid, so the emitted grid is
+    always full m×k."""
+    corpus = df.select(F.col(id_col), F.col(vec_col)).persist()
+    try:
+        seeds = _seed(corpus, k, vec_col, id_col)
+        dsub = _check_geometry(seeds.shape[1], m)
+        C = _lloyd(
+            corpus, seeds.reshape(len(seeds), m, dsub).transpose(1, 0, 2),
+            iterations, vec_col,
         )
-        .select(
-            "subspace",
-            "cluster_id",
-            # double from the start: the Lloyd update emits double means,
-            # and a float/double union would trip type coercion
-            F.col("subvec").cast("array<double>").alias("centroid"),
-        )
-    ).cache()
-
-    def _assign(cent: DataFrame) -> DataFrame:
-        C, cm, ck, _ = _codebook_tensor(cent)
-        cn2 = np.einsum("mkd,mkd->mk", C, C)
-
-        def gen(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                V = np.vstack(pdf["subvec"].to_numpy()).astype(np.float64)
-                S = pdf["subspace"].to_numpy()
-                out = np.empty(len(pdf), dtype=np.int64)
-                for j in np.unique(S):
-                    sel = S == j
-                    d = cn2[j][None, :] - 2.0 * (V[sel] @ C[j].T)
-                    out[sel] = np.argmin(d, axis=1)
-                yield pd.DataFrame(
-                    {
-                        "__id": pdf["__id"],
-                        "subspace": pdf["subspace"],
-                        "cluster_id": out,
-                        "subvec": pdf["subvec"],
-                    }
-                )
-
-        return sub.mapInPandas(
-            gen,
-            f"__id {sub.schema['__id'].dataType.simpleString()}, "
-            f"subspace int, cluster_id long, "
-            f"subvec {sub.schema['subvec'].dataType.simpleString()}",
-        )
-
-    for _ in range(iterations):
-        assigned = _assign(centroids)
-        # the update sums QUANTIZED LONGS, not raw doubles: integer
-        # addition is exact and therefore order-independent, so the
-        # trained centroids are bit-stable across partitionings and
-        # shuffle orders — a double sum could flip the final
-        # floor(c·2¹⁶) freeze by one ulp on a different partition
-        # layout. The mean is then exact-long-sum / count, and the
-        # /QUANT rescale divides by a power of two (exact in binary);
-        # the 2⁻¹⁶ resolution loss per Lloyd step is far below k-means'
-        # own convergence tolerance.
-        means = (
-            assigned.select(
-                "subspace",
-                "cluster_id",
-                F.posexplode(F.col("subvec")).alias("pos", "val"),
-            )
-            .groupBy("subspace", "cluster_id", "pos")
-            .agg(
-                F.sum(
-                    F.floor(F.col("val").cast("double") * F.lit(QUANT)).cast(
-                        "long"
-                    )
-                ).alias("__s"),
-                F.count(F.lit(1)).alias("__n"),
-            )
-            .select(
-                "subspace",
-                "cluster_id",
-                "pos",
-                (F.col("__s").cast("double") / F.col("__n") / F.lit(QUANT)).alias(
-                    "__m"
-                ),
-            )
-        )
-        prev = centroids
-        updated = means.groupBy("subspace", "cluster_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "__m"))),
-                lambda x: x["__m"],
-            ).alias("centroid")
-        )
-        centroids = updated.unionByName(
-            prev.join(
-                updated.select("subspace", "cluster_id"),
-                on=["subspace", "cluster_id"],
-                how="left_anti",
-            )
-        ).cache()
-        centroids.count()
-        prev.unpersist()
-
-    # freeze to exact integers — from here on everything is integer math
-    frozen = centroids.select(
-        "subspace",
-        "cluster_id",
-        F.transform(
-            F.col("centroid"), lambda x: F.floor(x * F.lit(QUANT)).cast("double")
-        ).alias("centroid"),
-    ).localCheckpoint(eager=True)
-    sub.unpersist()
-    centroids.unpersist()
-    return frozen
+    finally:
+        corpus.unpersist()
+    _, ck, _ = C.shape
+    # freeze to exact integers — from here on everything is integer math.
+    # An Arrow table plans as a LocalRelation: read without a job.
+    return df.sparkSession.createDataFrame(
+        pa.table({
+            "subspace": np.repeat(np.arange(m), ck),
+            "cluster_id": np.tile(np.arange(ck), m),
+            "centroid": list(np.floor(C * QUANT).reshape(m * ck, dsub)),
+        }),
+        "subspace int, cluster_id bigint, centroid array<double>",
+    )
 
 
 def encode_pq(
@@ -273,9 +180,7 @@ def encode_pq(
             n = len(pdf)
             codes = np.empty((n, m), dtype=np.int64)
             for j in range(m):
-                Vj = V[:, j * dsub : (j + 1) * dsub]
-                d = cn2[j][None, :] - 2.0 * (Vj @ C[j].T)
-                codes[:, j] = np.argmin(d, axis=1)
+                codes[:, j] = _nearest(V[:, j * dsub : (j + 1) * dsub], C[j], cn2[j])
             yield pd.DataFrame({id_col: pdf[id_col], "codes": list(codes)})
 
     return df.select(id_col, vec_col).mapInPandas(
@@ -582,8 +487,6 @@ def build_ivf_pq_index(
     compressed table."""
     import os
 
-    from beeper_matric_etl_tool_spark.ext.clustering import kmeans
-
     assignments, centroids = kmeans(
         emb, k=ivf_k, iterations=iterations, vec_col=vec_col, id_col=id_col
     )
@@ -630,8 +533,6 @@ def search_ivf_pq(
     import pandas as _pd
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
-
-    from beeper_matric_etl_tool_spark.ext.clustering import _sq_dist
 
     if refine and corpus is None:
         raise ValueError("search_ivf_pq: refine > 0 requires the raw corpus")

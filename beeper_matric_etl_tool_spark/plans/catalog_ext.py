@@ -38,6 +38,7 @@ from beeper_matric_etl_tool_spark.ext.pipeline import (
 from beeper_matric_etl_tool_spark.ext.quality import EMAIL_RE
 from beeper_matric_etl_tool_spark.operators import windows as xwin
 from beeper_matric_etl_tool_spark.plans.registry import register
+from beeper_matric_etl_tool_spark.plans.support import results, workdir
 from beeper_matric_etl_tool_spark.sources.tables import table, widen_narrow_scan
 
 # --------------------------------------------------------------------------
@@ -1755,7 +1756,6 @@ def doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle replays window fingerprints + the constant-offset vote —
     # including the hop arithmetic and any cross-document window
     # collisions — in SQL.
-    import tempfile
     from concurrent.futures import ThreadPoolExecutor
 
     from beeper_matric_etl_tool_spark.ext.passage_index import (
@@ -1787,7 +1787,7 @@ def doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("p")
     ).select(F.col("p.doc_id").cast("long").alias("doc_id"), "p.text")
-    pidx_dir = tempfile.mkdtemp(prefix="dp_attrib_idx_")
+    pidx_dir = workdir("dp_attrib_idx_")
 
     def _attrib_lifecycle():
         # build → probe (pinned BEFORE the index mutates) → delete; the
@@ -1820,48 +1820,45 @@ def doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         delete_from_passage_index(spark, pidx_dir, [ATTRIB_SRC_DOC])
         return leg
 
-    _pool = ThreadPoolExecutor(max_workers=1)
-    _f_attrib = _pool.submit(_attrib_lifecycle)
-    # kind='delta' (r13): dataset versioning — a deterministic second
-    # snapshot (every 97th doc at residue 3 removed, residue 5 edited,
-    # residue 7 re-added under id+1e6) diffed by `corpus_delta`:
-    # per-doc status added/removed/changed/unchanged rides cleaned_fp.
-    # The shuffle carries (id, 16-byte fingerprint), never text.
-    # Composed while the lifecycle thread's jobs run (its analysis is
-    # pure driver work); attrib_del_leg waits below — it reads the
-    # post-delete index state.
-    from beeper_matric_etl_tool_spark.ext.pipeline import corpus_delta
+    with ThreadPoolExecutor(max_workers=1) as _pool:
+        _f_attrib = _pool.submit(_attrib_lifecycle)
+        # kind='delta' (r13): dataset versioning — a deterministic second
+        # snapshot (every 97th doc at residue 3 removed, residue 5 edited,
+        # residue 7 re-added under id+1e6) diffed by `corpus_delta`:
+        # per-doc status added/removed/changed/unchanged rides cleaned_fp.
+        # The shuffle carries (id, 16-byte fingerprint), never text.
+        # Composed while the lifecycle thread's jobs run (its analysis is
+        # pure driver work); attrib_del_leg waits below — it reads the
+        # post-delete index state.
+        from beeper_matric_etl_tool_spark.ext.pipeline import corpus_delta
 
-    new_snap = (
-        docs.filter(F.col("doc_id") % 97 != 3)
-        .select(
-            "doc_id",
-            F.when(
-                F.col("doc_id") % 97 == 5,
-                F.concat(F.col("text"), F.lit(" v2")),
+        new_snap = (
+            docs.filter(F.col("doc_id") % 97 != 3)
+            .select(
+                "doc_id",
+                F.when(
+                    F.col("doc_id") % 97 == 5,
+                    F.concat(F.col("text"), F.lit(" v2")),
+                )
+                .otherwise(F.col("text"))
+                .alias("text"),
             )
-            .otherwise(F.col("text"))
-            .alias("text"),
-        )
-        .unionByName(
-            docs.filter(F.col("doc_id") % 97 == 7).select(
-                (F.col("doc_id") + 1000000).alias("doc_id"), "text"
+            .unionByName(
+                docs.filter(F.col("doc_id") % 97 == 7).select(
+                    (F.col("doc_id") + 1000000).alias("doc_id"), "text"
+                )
             )
         )
-    )
-    delta_leg = corpus_delta(docs, new_snap).select(
-        F.lit("delta").alias("kind"),
-        F.col("doc_id"),
-        *null_dims,
-        *null_fps,
-        F.col("status").alias("cleaned_fp"),
-        F.lit(None).cast("int").alias("n_units"),
-        F.lit(None).cast("int").alias("n_removed"),
-    )
-    try:
+        delta_leg = corpus_delta(docs, new_snap).select(
+            F.lit("delta").alias("kind"),
+            F.col("doc_id"),
+            *null_dims,
+            *null_fps,
+            F.col("status").alias("cleaned_fp"),
+            F.lit(None).cast("int").alias("n_units"),
+            F.lit(None).cast("int").alias("n_removed"),
+        )
         attrib_leg = _f_attrib.result()
-    finally:
-        _pool.shutdown(wait=False)
     attrib_del_leg = attribute_against_index(
         probes, spark, pidx_dir, min_matches=ATTRIB_MIN_MATCHES
     ).select(
@@ -2578,8 +2575,6 @@ def knn_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # search exhaustively (nprobe = k clusters) — the oracle replays
     # exact cosine over the post-lifecycle corpus, so the driver hash
     # pins that append visibility and takedown both reached the index.
-    import tempfile
-
     from beeper_matric_etl_tool_spark.ext.similarity_index import (
         append_ivf_index,
         build_ivf_index,
@@ -2587,7 +2582,7 @@ def knn_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         search_ivf,
     )
 
-    ividx = tempfile.mkdtemp(prefix="knn_ivf_lc_")
+    ividx = workdir("knn_ivf_lc_")
     build_ivf_index(emb, ividx, k=4, iterations=2)
     append_ivf_index(
         emb.filter(F.col("vec_id") == 2).select(
@@ -4301,7 +4296,6 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
 
-    import tempfile
     from concurrent.futures import ThreadPoolExecutor
 
     from beeper_matric_etl_tool_spark.ext.containment_index import (
@@ -4326,7 +4320,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         # everything in this chain touches only its own temp index dir
         # and the ct_* frames, so it cannot interact with the curation
         # chain's jobs beyond sharing executor slots.
-        cidx_dir = tempfile.mkdtemp(prefix="mmf_contain_idx_")
+        cidx_dir = workdir("mmf_contain_idx_")
         build_containment_index(
             ct_tracks, cidx_dir, kind="video", n_bits=64, stride=1,
             max_hamming=CT_MAX_HAMMING,
@@ -4358,308 +4352,304 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # contain/landmark) is independent of both chains, so its driver-side
     # composition (Catalyst analysis) now overlaps the chains' executor
     # jobs instead of waiting for them.
-    _pool = ThreadPoolExecutor(max_workers=2)
-    _f_life = _pool.submit(_lifecycle_chain)
-    _f_cur = _pool.submit(_curation_chain)
-    # kind='search': ranked variant retrieval semantics
-    # (ext/media_index.py:rank_media_variants — the relational core of
-    # media_search, oracle-checkable without a filesystem index). One
-    # probe per gradient family (docs 0..5, the originals) against the
-    # rest of the planted image corpus: top-3 by (hamming, ref_id) —
-    # deterministically the three exact copies at hamming 0. `width`
-    # carries the rank (the slot's fixed schema), `mime` the modality.
-    from beeper_matric_etl_tool_spark.ext.media_index import rank_media_variants
+    with ThreadPoolExecutor(max_workers=2) as _pool:
+        _f_life = _pool.submit(_lifecycle_chain)
+        _f_cur = _pool.submit(_curation_chain)
+        # kind='search': ranked variant retrieval semantics
+        # (ext/media_index.py:rank_media_variants — the relational core of
+        # media_search, oracle-checkable without a filesystem index). One
+        # probe per gradient family (docs 0..5, the originals) against the
+        # rest of the planted image corpus: top-3 by (hamming, ref_id) —
+        # deterministically the three exact copies at hamming 0. `width`
+        # carries the rank (the slot's fixed schema), `mime` the modality.
+        from beeper_matric_etl_tool_spark.ext.media_index import rank_media_variants
 
-    sigs_all = xmm.image_perceptual_bits(imgs, n_bits=64).filter(
-        F.col("error").isNull()
-    ).select(
-        "doc_id", F.lit("image").alias("modality"), "bits"
-    ).localCheckpoint(eager=False)  # r13: 6 consumers (search/recall/png legs)
+        sigs_all = xmm.image_perceptual_bits(imgs, n_bits=64).filter(
+            F.col("error").isNull()
+        ).select(
+            "doc_id", F.lit("image").alias("modality"), "bits"
+        ).localCheckpoint(eager=False)  # r13: 6 consumers (search/recall/png legs)
 
-    # kind='png_pair' (r13): the in-tree PNG codec driver-oracled. Two
-    # planted docs' PIXELS (doc 0 verbatim, doc 4 = seed 0's
-    # inverted-column variant) re-encode as Paeth-filtered PNGs (the
-    # hardest unfilter path) and hash through the SAME image plane —
-    # their distances to the BMP twins replay from the oracle's bits
-    # CTE: twin pairs at hamming 0 (content identity across
-    # containers), the cross pair (doc 4's BMP vs doc 0's PNG) at the
-    # planted edit distance. A broken decode (filter reconstruction,
-    # channel order, CRC walk) shifts the bits and hash-mismatches.
-    def gen_pngs(it):
-        for pdf in it:
-            ids, payloads = [], []
-            for d in pdf["doc_id"]:
-                for src in (0, 4):
-                    bmp = xmm.make_gradient_bmp(
-                        PHASH_W, PHASH_H, src % PHASH_SEEDS,
-                        PHASH_MARK_COL if (src // PHASH_SEEDS) % 2 else None,
-                    )
-                    px = xmm._bmp_pixels(bmp)[:, :, :3]
-                    ids.append(910 + src)
-                    payloads.append(xmm._encode_png(px, filter_type=4))
-            yield pd.DataFrame(
-                {"doc_id": pd.Series(ids, dtype="int64"), "payload": payloads}
-            )
+        # kind='png_pair' (r13): the in-tree PNG codec driver-oracled. Two
+        # planted docs' PIXELS (doc 0 verbatim, doc 4 = seed 0's
+        # inverted-column variant) re-encode as Paeth-filtered PNGs (the
+        # hardest unfilter path) and hash through the SAME image plane —
+        # their distances to the BMP twins replay from the oracle's bits
+        # CTE: twin pairs at hamming 0 (content identity across
+        # containers), the cross pair (doc 4's BMP vs doc 0's PNG) at the
+        # planted edit distance. A broken decode (filter reconstruction,
+        # channel order, CRC walk) shifts the bits and hash-mismatches.
+        def gen_pngs(it):
+            for pdf in it:
+                ids, payloads = [], []
+                for d in pdf["doc_id"]:
+                    for src in (0, 4):
+                        bmp = xmm.make_gradient_bmp(
+                            PHASH_W, PHASH_H, src % PHASH_SEEDS,
+                            PHASH_MARK_COL if (src // PHASH_SEEDS) % 2 else None,
+                        )
+                        px = xmm._bmp_pixels(bmp)[:, :, :3]
+                        ids.append(910 + src)
+                        payloads.append(xmm._encode_png(px, filter_type=4))
+                yield pd.DataFrame(
+                    {"doc_id": pd.Series(ids, dtype="int64"), "payload": payloads}
+                )
 
-    png_bits = xmm.image_perceptual_bits(
-        docs.select("doc_id").filter(F.col("doc_id") == 0)
-        .mapInPandas(gen_pngs, "doc_id long, payload binary"),
-        n_bits=64,
-    ).filter(F.col("error").isNull()).select(
-        F.col("doc_id").alias("png_id"), F.col("bits").alias("__pb")
-    )
-    bmp_bits = sigs_all.filter(F.col("doc_id").isin(0, 4)).select(
-        F.col("doc_id").alias("bmp_id"), F.col("bits").alias("__bb")
-    )
-    png_ham = F.aggregate(
-        F.zip_with("__pb", "__bb", lambda x, y: F.abs(x - y)),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    png_pair = (
-        png_bits.crossJoin(bmp_bits)
-        .filter(
-            (F.col("png_id") - 910 == F.col("bmp_id"))
-            | ((F.col("png_id") == 910) & (F.col("bmp_id") == 4))
+        png_bits = xmm.image_perceptual_bits(
+            docs.select("doc_id").filter(F.col("doc_id") == 0)
+            .mapInPandas(gen_pngs, "doc_id long, payload binary"),
+            n_bits=64,
+        ).filter(F.col("error").isNull()).select(
+            F.col("doc_id").alias("png_id"), F.col("bits").alias("__pb")
         )
-        .select(
-            F.lit("png_pair").alias("kind"),
-            F.col("bmp_id").cast("long").alias("id_a"),
-            F.col("png_id").cast("long").alias("id_b"),
-            F.lit("image/png").alias("mime"),
+        bmp_bits = sigs_all.filter(F.col("doc_id").isin(0, 4)).select(
+            F.col("doc_id").alias("bmp_id"), F.col("bits").alias("__bb")
+        )
+        png_ham = F.aggregate(
+            F.zip_with("__pb", "__bb", lambda x, y: F.abs(x - y)),
+            F.lit(0),
+            lambda acc, x: acc + x,
+        )
+        png_pair = (
+            png_bits.crossJoin(bmp_bits)
+            .filter(
+                (F.col("png_id") - 910 == F.col("bmp_id"))
+                | ((F.col("png_id") == 910) & (F.col("bmp_id") == 4))
+            )
+            .select(
+                F.lit("png_pair").alias("kind"),
+                F.col("bmp_id").cast("long").alias("id_a"),
+                F.col("png_id").cast("long").alias("id_b"),
+                F.lit("image/png").alias("mime"),
+                F.lit(None).cast("long").alias("byte_len"),
+                F.lit(None).cast("string").alias("payload_sha256"),
+                F.lit(None).cast("int").alias("width"),
+                F.lit(None).cast("int").alias("height"),
+                png_ham.cast("long").alias("hamming"),
+            )
+        )
+        ranked = rank_media_variants(
+            sigs_all.filter(F.col("doc_id") < PHASH_SEEDS),
+            sigs_all.filter(F.col("doc_id") >= PHASH_SEEDS),
+            max_hamming=PHASH_MAX_HAMMING, k=3, bands=PHASH_BANDS, n_bits=64,
+        ).localCheckpoint(eager=False)  # r13: search leg + recall grading share it
+        search = ranked.select(
+            F.lit("search").alias("kind"),
+            F.col("probe_id").cast("long").alias("id_a"),
+            F.col("ref_id").cast("long").alias("id_b"),
+            F.col("modality").alias("mime"),
             F.lit(None).cast("long").alias("byte_len"),
             F.lit(None).cast("string").alias("payload_sha256"),
-            F.lit(None).cast("int").alias("width"),
+            F.col("rank").cast("int").alias("width"),
             F.lit(None).cast("int").alias("height"),
-            png_ham.cast("long").alias("hamming"),
+            F.col("hamming").cast("long"),
         )
-    )
-    ranked = rank_media_variants(
-        sigs_all.filter(F.col("doc_id") < PHASH_SEEDS),
-        sigs_all.filter(F.col("doc_id") >= PHASH_SEEDS),
-        max_hamming=PHASH_MAX_HAMMING, k=3, bands=PHASH_BANDS, n_bits=64,
-    ).localCheckpoint(eager=False)  # r13: search leg + recall grading share it
-    search = ranked.select(
-        F.lit("search").alias("kind"),
-        F.col("probe_id").cast("long").alias("id_a"),
-        F.col("ref_id").cast("long").alias("id_b"),
-        F.col("modality").alias("mime"),
-        F.lit(None).cast("long").alias("byte_len"),
-        F.lit(None).cast("string").alias("payload_sha256"),
-        F.col("rank").cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        F.col("hamming").cast("long"),
-    )
-    # kind='recall': the BANDED retrieval graded against a brute-force
-    # EXACT top-k (`evaluate_recall`, the embedding tier's audit) — the
-    # pigeonhole guarantee measured, not assumed. The ground truth is an
-    # explicit probe-sized cross join (the eval-harness pattern, never
-    # the production path) with the same (hamming, ref_id) order.
-    from pyspark.sql import Window as _W
+        # kind='recall': the BANDED retrieval graded against a brute-force
+        # EXACT top-k (`evaluate_recall`, the embedding tier's audit) — the
+        # pigeonhole guarantee measured, not assumed. The ground truth is an
+        # explicit probe-sized cross join (the eval-harness pattern, never
+        # the production path) with the same (hamming, ref_id) order.
+        from pyspark.sql import Window as _W
 
-    from beeper_matric_etl_tool_spark.ext.similarity import evaluate_recall
+        from beeper_matric_etl_tool_spark.ext.similarity import evaluate_recall
 
-    a = sigs_all.filter(F.col("doc_id") < PHASH_SEEDS).select(
-        F.col("doc_id").alias("probe_id"), F.col("bits").alias("__ba")
-    )
-    b = sigs_all.filter(F.col("doc_id") >= PHASH_SEEDS).select(
-        F.col("doc_id").alias("ref_id"), F.col("bits").alias("__bb")
-    )
-    ham = F.aggregate(
-        F.zip_with("__ba", "__bb", lambda x, y: F.abs(x - y)),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    exact_topk = (
-        a.crossJoin(b)
-        .select("probe_id", "ref_id", ham.alias("hamming"))
-        .filter(F.col("hamming") <= PHASH_MAX_HAMMING)
-        .withColumn(
-            "rnk",
-            F.row_number().over(
-                _W.partitionBy("probe_id").orderBy("hamming", "ref_id")
-            ),
+        a = sigs_all.filter(F.col("doc_id") < PHASH_SEEDS).select(
+            F.col("doc_id").alias("probe_id"), F.col("bits").alias("__ba")
         )
-        .filter(F.col("rnk") <= 3)
-    )
-    # kind='contain': media SUBSEQUENCE containment
-    # (`ext/media_subseq.py:video_containment_pairs`) — the clip
-    # (frames [9, 17) of track 0, re-encoded) located inside the six
-    # planted tracks by per-frame image hashes + the temporal-
-    # consistency offset vote. 64-bit frame hashes (the closed-form
-    # oracle width); the slot carries offset in `width`, vote count in
-    # `height`, the worst unit distance in `hamming`.
-    # kind='contain_idx' (r13): the SAME planted corpus probed through
-    # the PERSISTED containment-index lifecycle (`ext/containment_index`)
-    # — build decodes the six tracks ONCE into unit signatures on disk
-    # (stride 1, radius pinned at build), the probe decodes ONLY the
-    # clip and votes against the stored units; the index path's verdicts
-    # are IDENTICAL to the batch core's. Built in _lifecycle_chain above.
-    # kind='contain_del' (r13): the takedown cascade driver-oracled.
-    # The pre-delete probe was pinned (localCheckpoint) BEFORE the index
-    # mutated in _lifecycle_chain; here the post-deletion index answers
-    # TWO clips: track 0's (every verdict gone — the removed source can
-    # no longer be named) and track 1's (still lands at its exact offset
-    # — deletion disturbed nothing else). The oracle replays the same
-    # closed-form vote over the post-deletion track set.
-    from beeper_matric_etl_tool_spark.ext.media_subseq import (
-        video_containment_pairs,
-    )
-
-    # (contain_del is composed after the lifecycle future joins — it
-    # reads the post-deletion index state; see below)
-    contain = video_containment_pairs(
-        ct_clip, ct_tracks,
-        max_hamming=CT_MAX_HAMMING, min_matches=CT_MIN_MATCHES, n_bits=64,
-    ).select(
-        F.lit("contain").alias("kind"),
-        F.col("clip_id").cast("long").alias("id_a"),
-        F.col("track_id").cast("long").alias("id_b"),
-        F.lit("video").alias("mime"),
-        F.lit(None).cast("long").alias("byte_len"),
-        F.lit(None).cast("string").alias("payload_sha256"),
-        F.col("offset").cast("int").alias("width"),
-        F.col("n_matched").cast("int").alias("height"),
-        F.col("max_unit_hamming").cast("long").alias("hamming"),
-    )
-    # kind='landmark' (r13): the alignment-free containment claim —
-    # a clip cut at sample 701 (an offset NO hop divides; the r12
-    # alignment probe measured the fingerprint's zero sub-hop shift
-    # tolerance, `tools/alignment_probe.py`) is located inside three
-    # texture tracks by ENERGY-LANDMARK anchors; the vote runs on
-    # source positions, so `offset`/width is the exact cut sample.
-    from beeper_matric_etl_tool_spark.ext.media_subseq import (
-        audio_containment_pairs,
-    )
-
-    def gen_lm_tracks(it):
-        for pdf in it:
-            payloads = [
-                xmm.make_texture_wav(LM_N, int(d)) for d in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    def gen_lm_clip(it):
-        for pdf in it:
-            payloads = [
-                xmm.make_texture_wav(
-                    LM_N, 0, clip=(LM_CLIP_START, LM_CLIP_END)
-                )
-                for _ in pdf["doc_id"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(
-                        [LM_CLIP_ID] * len(pdf), dtype="int64"
-                    ),
-                    "payload": payloads,
-                }
+        b = sigs_all.filter(F.col("doc_id") >= PHASH_SEEDS).select(
+            F.col("doc_id").alias("ref_id"), F.col("bits").alias("__bb")
+        )
+        ham = F.aggregate(
+            F.zip_with("__ba", "__bb", lambda x, y: F.abs(x - y)),
+            F.lit(0),
+            lambda acc, x: acc + x,
+        )
+        exact_topk = (
+            a.crossJoin(b)
+            .select("probe_id", "ref_id", ham.alias("hamming"))
+            .filter(F.col("hamming") <= PHASH_MAX_HAMMING)
+            .withColumn(
+                "rnk",
+                F.row_number().over(
+                    _W.partitionBy("probe_id").orderBy("hamming", "ref_id")
+                ),
             )
+            .filter(F.col("rnk") <= 3)
+        )
+        # kind='contain': media SUBSEQUENCE containment
+        # (`ext/media_subseq.py:video_containment_pairs`) — the clip
+        # (frames [9, 17) of track 0, re-encoded) located inside the six
+        # planted tracks by per-frame image hashes + the temporal-
+        # consistency offset vote. 64-bit frame hashes (the closed-form
+        # oracle width); the slot carries offset in `width`, vote count in
+        # `height`, the worst unit distance in `hamming`.
+        # kind='contain_idx' (r13): the SAME planted corpus probed through
+        # the PERSISTED containment-index lifecycle (`ext/containment_index`)
+        # — build decodes the six tracks ONCE into unit signatures on disk
+        # (stride 1, radius pinned at build), the probe decodes ONLY the
+        # clip and votes against the stored units; the index path's verdicts
+        # are IDENTICAL to the batch core's. Built in _lifecycle_chain above.
+        # kind='contain_del' (r13): the takedown cascade driver-oracled.
+        # The pre-delete probe was pinned (localCheckpoint) BEFORE the index
+        # mutated in _lifecycle_chain; here the post-deletion index answers
+        # TWO clips: track 0's (every verdict gone — the removed source can
+        # no longer be named) and track 1's (still lands at its exact offset
+        # — deletion disturbed nothing else). The oracle replays the same
+        # closed-form vote over the post-deletion track set.
+        from beeper_matric_etl_tool_spark.ext.media_subseq import (
+            video_containment_pairs,
+        )
 
-    lm_tracks = (
-        docs.select("doc_id").filter(F.col("doc_id") < LM_TRACKS)
-        .mapInPandas(gen_lm_tracks, "doc_id long, payload binary")
-        .localCheckpoint(eager=False)
-    )
-    lm_clip = (
-        docs.select("doc_id").filter(F.col("doc_id") == 0)
-        .mapInPandas(gen_lm_clip, "doc_id long, payload binary")
-        .localCheckpoint(eager=False)
-    )
-    landmark = audio_containment_pairs(
-        lm_clip, lm_tracks,
-        window_frames=LM_W,
-        max_hamming=LM_MAX_HAMMING,
-        min_matches=LM_MIN_MATCHES,
-        n_bits=64,
-        landmark_spacing=LM_SPACING,
-    ).select(
-        F.lit("landmark").alias("kind"),
-        F.col("clip_id").cast("long").alias("id_a"),
-        F.col("track_id").cast("long").alias("id_b"),
-        F.lit("audio").alias("mime"),
-        F.lit(None).cast("long").alias("byte_len"),
-        F.lit(None).cast("string").alias("payload_sha256"),
-        F.col("offset").cast("int").alias("width"),
-        F.col("n_matched").cast("int").alias("height"),
-        F.col("max_unit_hamming").cast("long").alias("hamming"),
-    )
-    # kind='vlandmark' (r13): the VIDEO landmark twin — scene-change
-    # anchors catch a cut at frame 7 (an arbitrary offset) at its exact
-    # source position; the vote runs on source frame numbers.
-    def gen_vl_tracks(it):
-        for pdf in it:
-            payloads = [
-                xmm.make_texture_avi(VL_W, VL_H, VL_N, int(d))
-                for d in pdf["doc_id"]
-            ]
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+        # (contain_del is composed after the lifecycle future joins — it
+        # reads the post-deletion index state; see below)
+        contain = video_containment_pairs(
+            ct_clip, ct_tracks,
+            max_hamming=CT_MAX_HAMMING, min_matches=CT_MIN_MATCHES, n_bits=64,
+        ).select(
+            F.lit("contain").alias("kind"),
+            F.col("clip_id").cast("long").alias("id_a"),
+            F.col("track_id").cast("long").alias("id_b"),
+            F.lit("video").alias("mime"),
+            F.lit(None).cast("long").alias("byte_len"),
+            F.lit(None).cast("string").alias("payload_sha256"),
+            F.col("offset").cast("int").alias("width"),
+            F.col("n_matched").cast("int").alias("height"),
+            F.col("max_unit_hamming").cast("long").alias("hamming"),
+        )
+        # kind='landmark' (r13): the alignment-free containment claim —
+        # a clip cut at sample 701 (an offset NO hop divides; the r12
+        # alignment probe measured the fingerprint's zero sub-hop shift
+        # tolerance, recorded in SURVEY.md item 33) is located inside three
+        # texture tracks by ENERGY-LANDMARK anchors; the vote runs on
+        # source positions, so `offset`/width is the exact cut sample.
+        from beeper_matric_etl_tool_spark.ext.media_subseq import (
+            audio_containment_pairs,
+        )
 
-    def gen_vl_clip(it):
-        for pdf in it:
-            payloads = [
-                xmm.make_texture_avi(
-                    VL_W, VL_H, VL_N, 0, clip=(VL_CLIP_START, VL_N)
+        def gen_lm_tracks(it):
+            for pdf in it:
+                payloads = [
+                    xmm.make_texture_wav(LM_N, int(d)) for d in pdf["doc_id"]
+                ]
+                yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+
+        def gen_lm_clip(it):
+            for pdf in it:
+                payloads = [
+                    xmm.make_texture_wav(
+                        LM_N, 0, clip=(LM_CLIP_START, LM_CLIP_END)
+                    )
+                    for _ in pdf["doc_id"]
+                ]
+                yield pd.DataFrame(
+                    {
+                        "doc_id": pd.Series(
+                            [LM_CLIP_ID] * len(pdf), dtype="int64"
+                        ),
+                        "payload": payloads,
+                    }
                 )
-                for _ in pdf["doc_id"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(
-                        [VL_CLIP_ID] * len(pdf), dtype="int64"
-                    ),
-                    "payload": payloads,
-                }
-            )
 
-    vl_tracks = (
-        docs.select("doc_id").filter(F.col("doc_id") < VL_TRACKS)
-        .mapInPandas(gen_vl_tracks, "doc_id long, payload binary")
-        .localCheckpoint(eager=False)
-    )
-    vl_clip = (
-        docs.select("doc_id").filter(F.col("doc_id") == 0)
-        .mapInPandas(gen_vl_clip, "doc_id long, payload binary")
-        .localCheckpoint(eager=False)
-    )
-    vlandmark = video_containment_pairs(
-        vl_clip, vl_tracks,
-        max_hamming=VL_MAX_HAMMING,
-        min_matches=VL_MIN_MATCHES,
-        n_bits=64,
-        landmark_spacing=VL_SPACING,
-    ).select(
-        F.lit("vlandmark").alias("kind"),
-        F.col("clip_id").cast("long").alias("id_a"),
-        F.col("track_id").cast("long").alias("id_b"),
-        F.lit("video").alias("mime"),
-        F.lit(None).cast("long").alias("byte_len"),
-        F.lit(None).cast("string").alias("payload_sha256"),
-        F.col("offset").cast("int").alias("width"),
-        F.col("n_matched").cast("int").alias("height"),
-        F.col("max_unit_hamming").cast("long").alias("hamming"),
-    )
+        lm_tracks = (
+            docs.select("doc_id").filter(F.col("doc_id") < LM_TRACKS)
+            .mapInPandas(gen_lm_tracks, "doc_id long, payload binary")
+            .localCheckpoint(eager=False)
+        )
+        lm_clip = (
+            docs.select("doc_id").filter(F.col("doc_id") == 0)
+            .mapInPandas(gen_lm_clip, "doc_id long, payload binary")
+            .localCheckpoint(eager=False)
+        )
+        landmark = audio_containment_pairs(
+            lm_clip, lm_tracks,
+            window_frames=LM_W,
+            max_hamming=LM_MAX_HAMMING,
+            min_matches=LM_MIN_MATCHES,
+            n_bits=64,
+            landmark_spacing=LM_SPACING,
+        ).select(
+            F.lit("landmark").alias("kind"),
+            F.col("clip_id").cast("long").alias("id_a"),
+            F.col("track_id").cast("long").alias("id_b"),
+            F.lit("audio").alias("mime"),
+            F.lit(None).cast("long").alias("byte_len"),
+            F.lit(None).cast("string").alias("payload_sha256"),
+            F.col("offset").cast("int").alias("width"),
+            F.col("n_matched").cast("int").alias("height"),
+            F.col("max_unit_hamming").cast("long").alias("hamming"),
+        )
+        # kind='vlandmark' (r13): the VIDEO landmark twin — scene-change
+        # anchors catch a cut at frame 7 (an arbitrary offset) at its exact
+        # source position; the vote runs on source frame numbers.
+        def gen_vl_tracks(it):
+            for pdf in it:
+                payloads = [
+                    xmm.make_texture_avi(VL_W, VL_H, VL_N, int(d))
+                    for d in pdf["doc_id"]
+                ]
+                yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
 
-    recall = evaluate_recall(
-        ranked, exact_topk, query_col="probe_id", id_col="ref_id"
-    ).select(
-        F.lit("recall").alias("kind"),
-        F.col("probe_id").cast("long").alias("id_a"),
-        F.col("n_exact").cast("long").alias("id_b"),
-        F.lit("image").alias("mime"),
-        F.lit(None).cast("long").alias("byte_len"),
-        F.lit(None).cast("string").alias("payload_sha256"),
-        F.col("n_hit").cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        F.col("recall_ppm").cast("long").alias("hamming"),
-    )
-    # join the eager chains (their jobs ran while the legs above were
-    # composed), then build the three legs that depend on their outputs
-    try:
-        mc_decisions = _f_cur.result()
-        cidx_dir, contain_idx = _f_life.result()
-    finally:
-        _pool.shutdown(wait=False)
+        def gen_vl_clip(it):
+            for pdf in it:
+                payloads = [
+                    xmm.make_texture_avi(
+                        VL_W, VL_H, VL_N, 0, clip=(VL_CLIP_START, VL_N)
+                    )
+                    for _ in pdf["doc_id"]
+                ]
+                yield pd.DataFrame(
+                    {
+                        "doc_id": pd.Series(
+                            [VL_CLIP_ID] * len(pdf), dtype="int64"
+                        ),
+                        "payload": payloads,
+                    }
+                )
+
+        vl_tracks = (
+            docs.select("doc_id").filter(F.col("doc_id") < VL_TRACKS)
+            .mapInPandas(gen_vl_tracks, "doc_id long, payload binary")
+            .localCheckpoint(eager=False)
+        )
+        vl_clip = (
+            docs.select("doc_id").filter(F.col("doc_id") == 0)
+            .mapInPandas(gen_vl_clip, "doc_id long, payload binary")
+            .localCheckpoint(eager=False)
+        )
+        vlandmark = video_containment_pairs(
+            vl_clip, vl_tracks,
+            max_hamming=VL_MAX_HAMMING,
+            min_matches=VL_MIN_MATCHES,
+            n_bits=64,
+            landmark_spacing=VL_SPACING,
+        ).select(
+            F.lit("vlandmark").alias("kind"),
+            F.col("clip_id").cast("long").alias("id_a"),
+            F.col("track_id").cast("long").alias("id_b"),
+            F.lit("video").alias("mime"),
+            F.lit(None).cast("long").alias("byte_len"),
+            F.lit(None).cast("string").alias("payload_sha256"),
+            F.col("offset").cast("int").alias("width"),
+            F.col("n_matched").cast("int").alias("height"),
+            F.col("max_unit_hamming").cast("long").alias("hamming"),
+        )
+
+        recall = evaluate_recall(
+            ranked, exact_topk, query_col="probe_id", id_col="ref_id"
+        ).select(
+            F.lit("recall").alias("kind"),
+            F.col("probe_id").cast("long").alias("id_a"),
+            F.col("n_exact").cast("long").alias("id_b"),
+            F.lit("image").alias("mime"),
+            F.lit(None).cast("long").alias("byte_len"),
+            F.lit(None).cast("string").alias("payload_sha256"),
+            F.col("n_hit").cast("int").alias("width"),
+            F.lit(None).cast("int").alias("height"),
+            F.col("recall_ppm").cast("long").alias("hamming"),
+        )
+        # join the eager chains (their jobs ran while the legs above were
+        # composed), then build the three legs that depend on their outputs
+        mc_decisions, (cidx_dir, contain_idx) = results(_f_cur, _f_life)
     curation = mc_decisions.select(
         F.lit("curation").alias("kind"),
         F.col("doc_id").cast("long").alias("id_a"),
@@ -5151,10 +5141,12 @@ def kmeans_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
         _f_bpe2 = _pool.submit(
             train_bpe_merges, docs_bpe.repartition(5), 12, 2
         )
-        assignments, centroids, clustered, edges, components = _f_cluster.result()
-        books, enc = _f_pq.result()
-        merges = _f_bpe1.result()
-        merges_repart = _f_bpe2.result()
+        (
+            (assignments, centroids, clustered, edges, components),
+            (books, enc),
+            merges,
+            merges_repart,
+        ) = results(_f_cluster, _f_pq, _f_bpe1, _f_bpe2)
 
     n_vectors = emb.agg(F.count(F.lit(1)).alias("n_vectors"))
     n_assigned = assignments.agg(F.count(F.lit(1)).alias("n_assigned"))

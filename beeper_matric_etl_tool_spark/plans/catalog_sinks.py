@@ -13,10 +13,6 @@ idempotent under driver re-runs (no state leaks between executions).
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
-import atexit
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,13 +20,8 @@ from pyspark.sql import functions as F
 
 from beeper_matric_etl_tool_spark import sinks
 from beeper_matric_etl_tool_spark.plans.registry import register
+from beeper_matric_etl_tool_spark.plans.support import workdir
 from beeper_matric_etl_tool_spark.sources.tables import table
-
-
-def _workdir() -> str:
-    d = tempfile.mkdtemp(prefix="sink-twin-")
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    return d
 
 
 @register(
@@ -74,7 +65,7 @@ def sink_append_poststate(spark: SparkSession, sf_dir: str) -> DataFrame:
     presence/non-nullness while hashing only deterministic columns
     (n_batches is NULL — no batching contract on the log surface)."""
     events = table(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "value")
-    append_target = os.path.join(_workdir(), "append_target")
+    append_target = os.path.join(workdir("sink-twin-"), "append_target")
     sinks.batched_append(
         events.filter(F.col("event_type") == "error").drop("value"), append_target
     )
@@ -89,7 +80,7 @@ def sink_append_poststate(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.count(F.lit(1)) == F.countDistinct("event_id")).alias("append_only"),
     ).select(F.lit("batched").alias("surface"), "*")
 
-    log_target = os.path.join(_workdir(), "log_target")
+    log_target = os.path.join(workdir("sink-twin-"), "log_target")
     sinks.append_log(
         events.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "value"),
         log_target,
@@ -125,7 +116,7 @@ def sink_config_poststate(spark: SparkSession, sf_dir: str) -> DataFrame:
     one value AND introduces a new column (schema evolution). The
     post-state must show the merged row — old keys kept, changed key
     updated, new key added."""
-    target = os.path.join(_workdir(), "config_target")
+    target = os.path.join(workdir("sink-twin-"), "config_target")
     n_regions = table(spark, sf_dir, "region").count()
     sinks.upsert_config(spark, target, {"sync_enabled": "true", "page_size": 1})
     final = sinks.upsert_config(spark, target, {"page_size": n_regions, "theme": "dark"})
@@ -160,7 +151,7 @@ def compaction_poststate(spark: SparkSession, sf_dir: str) -> DataFrame:
     alone), file count after (counted from the parquet file names), and
     row preservation (every event id survives the rewrite exactly once)."""
     events = table(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
-    target = os.path.join(_workdir(), "compact_target")
+    target = os.path.join(workdir("sink-twin-"), "compact_target")
     sinks.batched_append(events.filter(F.col("event_type") == "error"), target)
     sinks.batched_append(events.filter(F.col("event_type") == "signup"), target)
     removed = sinks.compact_target(
@@ -193,7 +184,7 @@ def sink_keyed_update_poststate(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-state. Untouched rows must be byte-equal; touched rows show the
     new balance."""
     creds = table(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_acctbal")
-    target = os.path.join(_workdir(), "creds_target")
+    target = os.path.join(workdir("sink-twin-"), "creds_target")
     # X1 layout + hash-bucket partitioning: the later keyed_update reads and
     # rewrites ONLY the buckets its keys hash into (partition-pruned MERGE)
     sinks.write_indexed(

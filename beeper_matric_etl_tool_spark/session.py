@@ -54,11 +54,9 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", max_partition_bytes)
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # let AQE coalesce INSIDE cached-plan materializations too (default
-        # false): every iterative trainer (kmeans/PQ/BPE/logreg/components)
-        # persists small intermediates, and without this each .cache()
-        # materializes at the full spark.sql.shuffle.partitions fan-out —
-        # measured r13: kmeans(k=8,it=3) at sf0.01 on a 200-partition
-        # session drops 4,885 → 109 tasks with this flag, result-identical.
+        # false): a persisted frame that sits after a shuffle (curate()'s
+        # stage caches, the sink batches) otherwise materializes at the
+        # full spark.sql.shuffle.partitions fan-out of mostly empty tasks.
         # Scale-independent: coalesced hash partitioning still satisfies
         # downstream clustered-distribution requirements, so no extra
         # exchanges appear at any size.

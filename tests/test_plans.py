@@ -397,3 +397,23 @@ def test_widen_narrow_scan_spreads_only_narrow_inputs(spark):
 
     wide = docs.repartition(target + 2)
     assert widen_narrow_scan(wide) is wide  # no-op: same object, no exchange
+
+
+def test_results_reads_every_future_after_a_failure():
+    """The driver-pool join reads every chain: a failing first chain does
+    not stop the second from being read, and the second chain's own
+    failure is reported, not dropped."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from beeper_matric_etl_tool_spark.plans.support import results
+
+    def fail(exc):
+        raise exc
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f1 = pool.submit(fail, ValueError("first"))
+        f2 = pool.submit(fail, KeyError("second"))
+        with pytest.warns(RuntimeWarning, match="second"):
+            with pytest.raises(ValueError, match="first"):
+                results(f1, f2)
+        assert results(pool.submit(int, "1"), pool.submit(int, "2")) == [1, 2]
