@@ -160,6 +160,36 @@ def assign_clusters(df: DataFrame, centroids: DataFrame, vec_col: str = "embeddi
     return df.select(id_col, vec_col).mapInPandas(assign, fields)
 
 
+def _train(
+    df: DataFrame, k: int, iterations: int, vec_col: str, id_col: str
+) -> tuple[DataFrame, np.ndarray, DataFrame]:
+    """The training half of `kmeans`, shared with `build_ivf_index`: seed
+    with the k lowest-id vectors, then `_lloyd` with m = 1 over the
+    persisted (id, vec) corpus. Returns (corpus, C, centroids): the corpus,
+    still persisted for a caller that reads it again (the caller
+    unpersists it); the emitted (k, dim) centroid matrix, float32 for a
+    float input and float64 for a double one; and the same centroids as a
+    (cluster_id bigint, centroid array<float|double>) frame."""
+    # persisted for the build: every round (and kmeans' final assignment)
+    # reads it — the same persist MLlib's own KMeans performs on its
+    # training RDD
+    corpus = df.select(F.col(id_col), F.col(vec_col)).persist()
+    C = _lloyd(corpus, _seed(corpus, k, vec_col, id_col)[None], iterations, vec_col)[0]
+    elem, dtype = (
+        ("double", np.float64)
+        if df.schema[vec_col].dataType.elementType.simpleString() == "double"
+        else ("float", np.float32)
+    )
+    C = C.astype(dtype)
+    # an Arrow table plans as a LocalRelation whatever the session's Arrow
+    # setting: reading the k centroid rows launches no job
+    centroids = df.sparkSession.createDataFrame(
+        pa.table({"cluster_id": np.arange(len(C)), "centroid": list(C)}),
+        f"cluster_id bigint, centroid array<{elem}>",
+    )
+    return corpus, C, centroids
+
+
 def kmeans(
     df: DataFrame,
     k: int = 8,
@@ -170,26 +200,13 @@ def kmeans(
     """Returns (assignments, centroids). Deterministic init: the k lowest-id
     vectors seed the centroids.
 
-    The Lloyd rounds are `_lloyd` with m = 1: one corpus pass and one
-    k·dim-row aggregate per round, whatever the embedding width — no
-    per-dimension aggregate expressions, so the plan is the same size at
-    dim 8 and dim 4096. Centroids are emitted as array<float> (array<double>
-    for a double input), one row per cluster_id."""
-    # persisted for the build: every round and the final assignment read
-    # it — the same persist MLlib's own KMeans performs on its training RDD
-    corpus = df.select(F.col(id_col), F.col(vec_col)).persist()
-    C = _lloyd(corpus, _seed(corpus, k, vec_col, id_col)[None], iterations, vec_col)[0]
-    elem, dtype = (
-        ("double", np.float64)
-        if df.schema[vec_col].dataType.elementType.simpleString() == "double"
-        else ("float", np.float32)
-    )
-    # an Arrow table plans as a LocalRelation whatever the session's Arrow
-    # setting: reading the k centroid rows launches no job
-    centroids = df.sparkSession.createDataFrame(
-        pa.table({"cluster_id": np.arange(len(C)), "centroid": list(C.astype(dtype))}),
-        f"cluster_id bigint, centroid array<{elem}>",
-    )
+    Training is `_train` (shared with `build_ivf_index`), whose Lloyd
+    rounds are `_lloyd` with m = 1: one corpus pass and one k·dim-row
+    aggregate per round, whatever the embedding width — no per-dimension
+    aggregate expressions, so the plan is the same size at dim 8 and dim
+    4096. Centroids are emitted as array<float> (array<double> for a
+    double input), one row per cluster_id."""
+    corpus, _, centroids = _train(df, k, iterations, vec_col, id_col)
     # final re-assignment against the EMITTED centroids — the Lloyd
     # invariant (every vector in its argmin cluster over the returned
     # centroids) holds only then. Materialized: the assignment is

@@ -354,19 +354,19 @@ def delete_from_batched_tables(
     from rooms to participants/messages
     (/root/reference/src/server/db/schema.ts:51,68).
 
-    Shape: ``ids`` (a small Python list, or a one-column DataFrame for
-    driver-unbounded lists) anti-joins each table — but only the
-    TOUCHED ``partition_col`` partitions (``ingest_batch`` for the
-    batched families; ``cluster_id`` for the IVF vector index, r13) are
-    rewritten: one broadcast
-    probe finds which partitions hold any doomed row, the kept rows of
-    those partitions are staged into ``<table>.delete``, and partitions
-    swap via the compaction family's rename discipline (originals moved
-    to ``<table>.old``, replacements moved in, both staging dirs
-    removed). A partition whose every row is deleted simply disappears.
-    Untouched partitions — the overwhelming majority under a bounded
-    compliance list — are never read past the probe's partition-pruned
-    scan nor rewritten.
+    Shape: ``ids`` is a small Python list, matched as an ``IN``-list
+    filter, or a one-column DataFrame for driver-unbounded lists,
+    matched by a join (an anti join for the rewrite). Only the TOUCHED
+    ``partition_col`` partitions (``ingest_batch`` for the batched
+    families; ``cluster_id`` for the IVF vector index, r13) are
+    rewritten: one census query counts the doomed rows per partition,
+    the kept rows of those partitions are staged into
+    ``<table>.delete``, and partitions swap via the compaction family's
+    rename discipline (originals moved to ``<table>.old``, replacements
+    moved in, both staging dirs removed). A partition whose every row
+    is deleted simply disappears. Untouched partitions — the
+    overwhelming majority under a bounded compliance list — are read
+    only by the census scan and never rewritten.
 
     Crash posture (single writer, like compaction): all staging is
     written BEFORE any partition moves, and healing runs first on every
@@ -388,13 +388,29 @@ def delete_from_batched_tables(
         # frame must be allowed to shuffle-join; AQE picks broadcast
         # when it is in fact small
         del_ids = ids.toDF("__del_id").distinct()
+        on = F.col(id_col) == F.col("__del_id")
+
+        def hits(df):
+            return df.join(del_ids, on, "inner")
+
+        def kept_rows(df):
+            return df.join(del_ids, on, "left_anti")
     else:
         ids = list(ids)
         if not ids:
             return {sub: 0 for sub in tables}
-        del_ids = spark.createDataFrame(
-            [(i,) for i in ids], f"__del_id {'string' if isinstance(ids[0], str) else 'long'}"
-        ).distinct().hint("broadcast")  # bounded compliance list
+        # bounded compliance list: an IN-list literal, so the census and
+        # the rewrite are plain filters — no ids table to build, dedupe
+        # or broadcast
+        doomed = F.col(id_col).isin(ids)
+
+        def hits(df):
+            return df.filter(doomed)
+
+        def kept_rows(df):
+            # a NULL id matches no doomed id and is kept, as under the
+            # anti join
+            return df.filter(~F.coalesce(doomed, F.lit(False)))
     for sub in tables:
         src = os.path.join(path, sub)
         stage = src + ".delete"
@@ -416,19 +432,14 @@ def delete_from_batched_tables(
         shutil.rmtree(stage, ignore_errors=True)
 
         df = spark.read.parquet(src)
-        hit = df.join(
-            del_ids, F.col(id_col) == F.col("__del_id"), "inner"
-        )
-        per_part = hit.groupBy(partition_col).agg(
+        per_part = hits(df).groupBy(partition_col).agg(
             F.count(F.lit(1)).alias("n")
         ).collect()
         touched = [int(r[0]) for r in per_part]
         counts[sub] = int(sum(r["n"] for r in per_part))
         if not touched:
             continue
-        kept = df.filter(F.col(partition_col).isin(touched)).join(
-            del_ids, F.col(id_col) == F.col("__del_id"), "left_anti"
-        )
+        kept = kept_rows(df.filter(F.col(partition_col).isin(touched)))
         kept.write.mode("overwrite").partitionBy(partition_col).parquet(stage)
         os.makedirs(old, exist_ok=True)
         for b in touched:

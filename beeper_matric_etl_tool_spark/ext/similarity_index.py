@@ -4,26 +4,29 @@
 builds the index ONCE and amortizes it:
 
   build:  k-means over the corpus → write `centroids/` (k rows) and
-          `vectors/` parquet PARTITIONED BY cluster_id. The partition
-          column is the physical index: probing a cluster is a
-          partition-pruned read, not a filter over everything.
+          `vectors/` parquet PARTITIONED BY cluster_id, so a cluster's
+          vectors are one directory.
   probe:  assign each query to its `nprobe` nearest centroids (broadcast
-          of k rows), read only those partitions, exact cosine + top-k
-          within the candidates.
+          of k rows), join the vectors on cluster_id, exact cosine +
+          top-k within the candidates.
 
-`nprobe` is the recall/cost dial: 1 reads ~1/k of the data, k reads all
-of it (== brute force). The recall test pins that more probes ⇒ no worse
-recall.
+`nprobe` is the recall/cost dial: 1 scores ~1/k of the data per query, k
+scores all of it (== brute force). The recall test pins that more probes
+⇒ no worse recall. The vectors scan itself is not partition-pruned:
+every cluster is read, and the probe-map join discards the unprobed ones
+(see `search_ivf`).
 """
 
 from __future__ import annotations
 
 import os
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
-from beeper_matric_etl_tool_spark.ext.clustering import _sq_dist, kmeans
+from beeper_matric_etl_tool_spark.ext.clustering import _nearest, _sq_dist, _train
 from beeper_matric_etl_tool_spark.ext.similarity import cosine_topk  # noqa: F401 (re-export)
 
 
@@ -35,15 +38,46 @@ def build_ivf_index(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> None:
-    """Build and persist the index: centroids + cluster-partitioned vectors."""
-    assignments, centroids = kmeans(emb, k=k, iterations=iterations, vec_col=vec_col, id_col=id_col)
-    clustered = emb.join(assignments, on=id_col)
+    """Build and persist the index: centroids + cluster-partitioned vectors.
+
+    Trains with `kmeans`' own training half (`clustering._train`), then
+    assigns in the write itself: one mapInPandas stage passes every input
+    column through and appends ``cluster_id``, the nearest EMITTED
+    centroid (the same argmin, ties to the lower id, as `kmeans`' final
+    assignment), so no assignment frame is materialized and joined back."""
+    corpus, C, centroids = _train(emb, k, iterations, vec_col, id_col)
+    corpus.unpersist()
+    C = C.astype(np.float64)
+    cn2 = np.einsum("ij,ij->i", C, C)
+
+    def assign(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            V = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
+            yield pdf.assign(cluster_id=_nearest(V, C, cn2))
+
+    # the stored column order is (id, other input columns, cluster_id)
+    emb = emb.select(id_col, *(c for c in emb.columns if c != id_col))
+    clustered = emb.mapInPandas(
+        assign, StructType(emb.schema.fields + [StructField("cluster_id", LongType())])
+    )
     centroids.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
     (
         clustered.repartition(F.col("cluster_id"))
         .write.mode("overwrite")
         .partitionBy("cluster_id")
         .parquet(os.path.join(path, "vectors"))
+    )
+
+
+def _read_centroids(spark: SparkSession, path: str) -> DataFrame:
+    """The index's centroids under a fixed schema, so the read plans with
+    no schema-inference job. A float build stores array<float>, which the
+    parquet readers widen to double exactly; `_sq_dist` computes in double
+    either way, so every distance is unchanged."""
+    return spark.read.schema("cluster_id bigint, centroid array<double>").parquet(
+        os.path.join(path, "centroids")
     )
 
 
@@ -66,8 +100,7 @@ def append_ivf_index(
     cluster_id) are appended — extra columns the build happened to
     store (e.g. a label) null-fill on merged reads; `search_ivf` never
     reads them."""
-    spark = emb.sparkSession
-    centroids = spark.read.parquet(os.path.join(path, "centroids"))
+    centroids = _read_centroids(emb.sparkSession, path)
     scored = emb.crossJoin(F.broadcast(centroids)).withColumn(
         "__d", _sq_dist(F.col(vec_col), F.col("centroid"))
     )
@@ -175,9 +208,18 @@ def search_ivf(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Probe the persisted index: nprobe nearest clusters per query, exact
-    rerank within candidates. The vectors scan carries a cluster_id IN
-    (…probed…) predicate — partition pruning does the data reduction."""
-    centroids = spark.read.parquet(os.path.join(path, "centroids"))
+    rerank within candidates. Each query's probe-map rows carry its
+    quantized vector and squared norm, so the candidates need one
+    broadcast join (probe map ⋈ vectors on cluster_id).
+
+    The vectors scan is NOT partition-pruned: every cluster is read and
+    the join discards the unprobed ones. Dynamic partition pruning needs
+    AQE to reuse the join's broadcast for the pruning filter, and the
+    probe map's window shuffle wraps that broadcast in an AQEShuffleRead,
+    so the final plan carries ``dynamicpruningexpression(true)``."""
+    from beeper_matric_etl_tool_spark.ext.similarity import dot, quantize
+
+    centroids = _read_centroids(spark, path)
     q = queries.select(F.col(id_col), F.col(vec_col))
     probed = q.crossJoin(F.broadcast(centroids)).withColumn(
         "__d", _sq_dist(F.col(vec_col), F.col("centroid"))
@@ -186,29 +228,31 @@ def search_ivf(
     probe_map = (
         probed.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= nprobe)
-        .select(F.col(id_col).alias("__qid"), "cluster_id")
+        .select(
+            F.col(id_col).alias("__qid"),
+            "cluster_id",
+            quantize(F.col(vec_col)).alias("__qv"),
+        )
+        .withColumn("__qn2", dot(F.col("__qv"), F.col("__qv")))
     )
     vectors = spark.read.parquet(os.path.join(path, "vectors"))
     # bind candidates to EACH query's own probed clusters: the equi-join on
-    # (cluster_id) against the per-query probe map is the pruning step —
-    # a query never scores a vector outside its nprobe clusters.
-    from beeper_matric_etl_tool_spark.ext.similarity import dot, quantize
-
-    qn = q.withColumn("__qv", quantize(F.col(vec_col))).withColumn(
-        "__qn2", dot(F.col("__qv"), F.col("__qv"))
-    ).select(F.col(id_col).alias("__qid"), "__qv", "__qn2")
+    # (cluster_id) against the per-query probe map — a query never scores
+    # a vector outside its nprobe clusters.
     cand = (
         F.broadcast(probe_map)
         .join(vectors, on="cluster_id")
         .select(
             "__qid",
+            "__qv",
+            "__qn2",
             F.col(id_col).alias("neighbor_id"),
             quantize(F.col(vec_col)).alias("__cv"),
         )
         .filter(F.col("__qid") != F.col("neighbor_id"))
         .withColumn("__cn2", dot(F.col("__cv"), F.col("__cv")))
     )
-    scored = cand.join(F.broadcast(qn), on="__qid").withColumn(
+    scored = cand.withColumn(
         "cosine_ppm",
         # try_divide, not /: under the session's ANSI mode a zero-norm
         # vector would otherwise raise DIVIDE_BY_ZERO mid-search; NULL

@@ -2575,6 +2575,13 @@ def knn_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # search exhaustively (nprobe = k clusters) — the oracle replays
     # exact cosine over the post-lifecycle corpus, so the driver hash
     # pins that append visibility and takedown both reached the index.
+    # Every step runs eagerly here, and each Spark job costs about 0.1 s
+    # of scheduling whatever its size (local[4], sf0.01), so the steps
+    # keep their job counts down: build trains and then assigns inside
+    # its vectors write (8 jobs), append and search read the centroids
+    # under a fixed schema (no inference job), the delete matches its id
+    # list as an IN-list filter (4 jobs), and search joins the vectors
+    # with one broadcast probe map.
     from beeper_matric_etl_tool_spark.ext.similarity_index import (
         append_ivf_index,
         build_ivf_index,

@@ -19,6 +19,7 @@ from beeper_matric_etl_tool_spark.ext.dedup_index import (
     append_dedup_index,
     build_dedup_index,
     dedup_against_index,
+    delete_from_batched_tables,
     delete_from_dedup_index,
 )
 
@@ -581,3 +582,100 @@ def test_ivf_compaction_folds_append_files(spark, tmp_path):
         for r in ivf.search_ivf(spark, idx, q, k=5, nprobe=2).collect()
     )
     assert after == before
+
+
+def _batched_table(spark, path, rows, id_type="long"):
+    spark.createDataFrame(
+        rows, f"doc_id {id_type}, v string, {BATCH_COL} long"
+    ).write.partitionBy(BATCH_COL).parquet(os.path.join(path, "t"))
+
+
+def _rows(spark, path):
+    return sorted(
+        (tuple(r) for r in spark.read.parquet(os.path.join(path, "t")).collect()),
+        key=repr,
+    )
+
+
+def test_delete_list_keeps_null_ids_and_counts_a_repeated_id_once(spark, tmp_path):
+    """A Python id list deletes through an IN-list filter: a row whose id
+    is NULL matches no doomed id and survives the rewrite of its
+    partition (as under the DataFrame path's anti join), and an id listed
+    twice is deleted and counted once."""
+    idx = str(tmp_path / "nulls")
+    _batched_table(
+        spark, idx,
+        [(1, "a", 0), (2, "b", 0), (None, "n", 0), (3, "c", 1), (None, "m", 1)],
+    )
+    counts = delete_from_batched_tables(spark, idx, ("t",), "doc_id", [2, 2, 3])
+    assert counts == {"t": 2}
+    assert _rows(spark, idx) == sorted(
+        [(1, "a", 0), (None, "n", 0), (None, "m", 1)], key=repr
+    )
+
+
+def test_delete_list_of_string_ids(spark, tmp_path):
+    idx = str(tmp_path / "strs")
+    _batched_table(
+        spark, idx, [("d1", "a", 0), ("d2", "b", 0), ("d3", "c", 1)], "string"
+    )
+    counts = delete_from_batched_tables(
+        spark, idx, ("t",), "doc_id", ["d2", "d3", "absent"]
+    )
+    assert counts == {"t": 2}
+    assert _rows(spark, idx) == [("d1", "a", 0)]
+
+
+def test_delete_list_and_frame_paths_agree(spark, tmp_path):
+    """The IN-list path (Python ids) and the join path (DataFrame ids)
+    return the same counts and leave the same rows, NULL ids and repeated
+    ids included."""
+    rows = [
+        (1, "a", 0), (2, "b", 0), (None, "n", 0),
+        (3, "c", 1), (4, "d", 1), (5, "e", 2), (None, "m", 2),
+    ]
+    ids = [2, 3, 3, 5, 99]
+    by_list, by_frame = str(tmp_path / "list"), str(tmp_path / "frame")
+    _batched_table(spark, by_list, rows)
+    _batched_table(spark, by_frame, rows)
+    c_list = delete_from_batched_tables(spark, by_list, ("t",), "doc_id", ids)
+    c_frame = delete_from_batched_tables(
+        spark, by_frame, ("t",), "doc_id",
+        spark.createDataFrame([(i,) for i in ids], "id long"),
+    )
+    assert c_list == c_frame == {"t": 3}
+    assert _rows(spark, by_list) == _rows(spark, by_frame) == sorted(
+        [(1, "a", 0), (None, "n", 0), (4, "d", 1), (None, "m", 2)], key=repr
+    )
+
+
+def test_ivf_lifecycle_job_budgets(spark, sf_dir, tmp_path):
+    """Spark jobs per IVF lifecycle step at sf0.001, from the DAG
+    scheduler's job counter: build(k=4, iterations=2) ≤ 8 (seed, two
+    Lloyd rounds of two jobs, the centroid write, and the assigning
+    write's shuffle and write), append ≤ 2 (no schema-inference job for
+    the centroids) and a one-id delete ≤ 4 (no ids table to build)."""
+    from beeper_matric_etl_tool_spark.ext import similarity_index as ivf
+    from beeper_matric_etl_tool_spark.sources.tables import table as load
+
+    emb = load(spark, sf_dir, "embeddings")
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    idx = str(tmp_path / "ivf_jobs")
+
+    def jobs(step):
+        j0 = dag.numTotalJobs()
+        step()
+        return dag.numTotalJobs() - j0
+
+    used = {
+        "build": jobs(lambda: ivf.build_ivf_index(emb, idx, k=4, iterations=2)),
+        "append": jobs(lambda: ivf.append_ivf_index(
+            emb.filter(F.col("vec_id") == 2).select(
+                F.lit(9000).cast("long").alias("vec_id"), "embedding"
+            ),
+            idx,
+        )),
+        "delete": jobs(lambda: ivf.delete_from_ivf_index(spark, idx, [2])),
+    }
+    budget = {"build": 8, "append": 2, "delete": 4}
+    assert {s: n for s, n in used.items() if n > budget[s]} == {}

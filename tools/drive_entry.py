@@ -1,9 +1,16 @@
 """Drive __spark_entry__ exactly as the driver does: fresh plain SparkSession
 (driver defaults, NOT our tuned session), entry() smoke, then every
 queries()/oracle_sql() pair compared against DuckDB at sf0.01."""
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+# Python workers import the package too (Arrow UDFs pickle package
+# functions by reference), and they inherit this environment
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+)
 import duckdb
 from pyspark.sql import SparkSession
 
